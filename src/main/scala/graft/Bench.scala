@@ -20,7 +20,7 @@ object Bench {
           catch { case e: Throwable => Some(e.getClass.getSimpleName) }
         // release the query's own persisted intermediates; timed WITH the
         // query (cache lifetime is part of its cost). Cross-query shared
-        // caches (the LSH pair graph) are not registered and survive.
+        // caches (graft.queries.SharedCaches) are pinned and survive.
         graft.operators.CacheScope.drain()
         (name, (System.nanoTime() - t0) / 1e9, err)
       }

@@ -15,9 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * 2.5× purely from that cache pressure.
   *
   * Deliberately NOT for cross-query shared intermediates (the LSH candidate
-  * graph feeding q31/q60/q61 persists directly and lives for the session —
-  * that sharing is the point); this is for persists whose last consumer is
-  * inside the same query plan.
+  * graph feeding q31/q60/q61 is a `graft.queries.SharedCache`, persisted
+  * and pinned for the session — that sharing is the point); this is for
+  * persists whose last consumer is inside the same query plan.
   */
 object CacheScope {
 
@@ -26,14 +26,14 @@ object CacheScope {
 
   /** Mark `df`'s PLAN as session-pinned: [[drain]] will never unpersist a
     * registered frame whose canonicalized plan matches a pinned one.
-    * Session-shared builders (SharedCaches) pin their frames so a
+    * Every `graft.queries.SharedCache` pins its frames so a
     * standalone operator that happens to [[persist]] the IDENTICAL plan
     * (Spark's CacheManager keys entries by canonicalized plan, so the two
     * frames share ONE cache entry) cannot evict the shared cache out from
     * under every cross-query consumer at its drain. */
   def pin(df: DataFrame): DataFrame = {
-    // evict pins of stopped sessions (the TrieMap builders' filterInPlace
-    // discipline): a stale pin retains its session's plan graph forever
+    // evict pins of stopped sessions (as SharedCache evicts its entries):
+    // a stale pin retains its session's plan graph forever
     // and could sameResult-match — and so suppress the drain of — a LIVE
     // session's frame over the same data
     pinned.removeIf(p => p.sparkSession.sparkContext.isStopped)
@@ -46,7 +46,7 @@ object CacheScope {
     * No-op when the PLAN is already cached: Spark's CacheManager keys
     * cache entries by canonicalized plan, so "persisting" a frame whose
     * plan equals an existing entry (typically a SESSION-SHARED builder's
-    * — e.g. a standalone operator building the exact frame SharedCaches
+    * — e.g. a standalone operator building the exact frame a SharedCache
     * already holds) adopts someone else's cache — and the next [[drain]]
     * would EVICT it out from under every cross-query consumer. Skipping
     * registration keeps drain scoped to blocks this query actually

@@ -817,7 +817,8 @@ object TextDedup {
     * discipline every shingle-family operator here uses — a fingerprint in
     * thousands of documents is a template, and capping it bounds the
     * per-fingerprint inverted list, so the self-join never expands on a
-    * hot key). Output: doc_a, doc_b (a < b), n_shared. */
+    * hot key). Output: doc_a, doc_b (a < b), n_shared. Every id must cast
+    * to a long in [0, 2^32); any other id fails the query. */
   def winnowNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 5, w: Int = 4, minShared: Long = 2,
                          maxDf: Long = 20): DataFrame = {
@@ -828,11 +829,18 @@ object TextDedup {
     // fingerprint's ids and expand the pairs IN-ROW (native PackedPairs,
     // the ngramJaccardPairs idiom; identical pair multiset since ids are
     // distinct per fp). The df cap bounds every group at maxDf ids, so no
-    // oversized-bucket fallback is needed. ids must fit in [0, 2^32) —
-    // the same bound ngramJaccardPairs documents for this corpus.
+    // oversized-bucket fallback is needed. A packed pair holds two 32-bit
+    // ids, so an id that is null as a long, negative or >= 2^32 fails the
+    // query here (in the same projection — no extra job) instead of
+    // corrupting or dropping pairs.
+    val id = col(idCol).cast("long")
     fps.join(keep, "fp")
       .groupBy(col("fp"))
-      .agg(collect_list(col(idCol).cast("long")).as("ids"))
+      .agg(collect_list(
+        when(id.isNull || id < 0L || id >= (1L << 32), raise_error(concat(
+          lit(s"winnowNearDupPairs: $idCol outside [0, 2^32): "),
+          coalesce(col(idCol).cast("string"), lit("null")))))
+          .otherwise(id)).as("ids"))
       .where(size(col("ids")) > 1)
       .select(explode(graft.functions.PackedPairs.packed_pairs(col("ids")))
         .as("pair"))

@@ -27,8 +27,8 @@ object InferQueries {
   /** q221/q222 support threshold: a brand pair must co-occur in at least
     * num/den (2.2%) of all orders — a SHARE, not an absolute count, so the
     * predicate means the same thing at every scale factor. */
-  private val supNum = 11L
-  private val supDen = 500L
+  private[queries] val supNum = 11L
+  private[queries] val supDen = 500L
 
   val queries: Map[String, Q] = Map(
 
@@ -151,7 +151,7 @@ object InferQueries {
     // together in ≥ 2.2% of orders, with lift vs independence — the
     // association rule screen. Per-order pair expansion bounded by order
     // width.
-    "q221_brand_lift" -> ((s, dir) => brandLift(s, dir)),
+    "q221_brand_lift" -> ((s, dir) => SharedCaches.brandLift(s, dir)),
 
     // Triangle census of the brand co-purchase graph (edges = the q221
     // support-filtered pairs): per-brand triangle participation — the
@@ -192,29 +192,10 @@ object InferQueries {
       Graphs.kCorePeel(brandEdges(s, dir), "item_a", "item_b",
         k = 3, rounds = 6)))
 
-  /** The q221 brand-lift table, computed once per (session, sf dir) and
-    * persisted — four queries (q221/q222/q267/q268) consume the same
-    * support-filtered co-purchase graph, exactly the nearDupPairs
-    * shared-graph pattern (the lift table is |brand-pairs|-bounded, so
-    * the persist is tiny and survives CacheScope's per-query drain). */
-  private val brandLiftCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def brandLift(s: SparkSession, dir: String): DataFrame = {
-    brandLiftCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    brandLiftCache.getOrElseUpdate((s, dir),
-      Graphs.cooccurrenceLift(
-        table(s, dir, "lineitem")
-          .join(table(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")),
-        "l_orderkey", "p_brand", supNum, supDen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
   /** The support-filtered brand co-purchase edge set, shared by the
     * graph queries. */
   private def brandEdges(s: SparkSession, dir: String): DataFrame =
-    brandLift(s, dir).select(col("item_a"), col("item_b"))
+    SharedCaches.brandLift(s, dir).select(col("item_a"), col("item_b"))
 
   /** Shared oracle prefix: the same edge set as [[brandEdges]], ending at
     * `e(a, b2)` (a < b2) and its symmetric closure `und`. MATERIALIZED:

@@ -32,388 +32,6 @@ object LlmQueries {
     (11, " host 192.168.10.254 token" +
       " deadbeefcafebabe0123456789abcdef0123"))
 
-  /** The MinHash-LSH near-dup pair set is consumed by three queries (q31
-    * pairs, q60 edit distances, q61 clustering). Computed once per
-    * (session, sf dir) and persisted — exactly how a production dedup
-    * pipeline feeds one candidate graph to all its consumers, and it keeps
-    * the bench honest about shared intermediates. The result is tiny
-    * (pairs above threshold). */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def nearDupPairs(s: SparkSession, d: String): DataFrame = {
-    // evict entries of stopped sessions so neither their cached blocks nor
-    // the session object graphs are pinned forever
-    pairsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    pairsCache.getOrElseUpdate((s, d),
-      TextDedup.minhashNearDupPairs(
-        table(s, d, "documents"), "doc_id", "text", threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** q75's n-gram Jaccard pair set, shared the same way: its inverted-
-    * index candidate build is the suite's single most expensive stage
-    * (~5 s warmed at sf0.1), and q291's agreement Venn used to re-pay it
-    * in full. Computed once per (session, sf dir); what persists is only
-    * the verified pairs above threshold — tiny. Queries remain standalone
-    * in semantics: each consumer rebuilds identically if run alone. */
-  private val ngramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def ngramPairs(s: SparkSession, d: String): DataFrame = {
-    ngramCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ngramCache.getOrElseUpdate((s, d),
-      TextDedup.ngramJaccardPairs(
-        table(s, d, "documents"), "doc_id", "text",
-        n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** q141's winnowed-fingerprint pair set, shared the same way (the r12
-    * verdict's last ≥4 s dedup heavies): the fingerprint inventory +
-    * df-capped inverted-list self-join is the cost; what persists is
-    * only the verified pair set — tiny. Standalone semantics: a cold
-    * call rebuilds identically (RoundThirteenOpsSpec pins it). */
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def winnowPairs(s: SparkSession, d: String): DataFrame = {
-    winnowCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    winnowCache.getOrElseUpdate((s, d),
-      TextDedup.winnowNearDupPairs(
-        table(s, d, "documents"), "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** The q345/q346 end-to-end dedup worklist (exact → near-dup →
-    * semantic, per-doc fate + survivor), session-shared like
-    * [[nearDupPairs]]: the worklist query and its funnel both consume one
-    * build, and the persisted result is |docs| rows. The near-dup stage
-    * reuses the shared MinHash pair graph; the semantic pair set is the
-    * q142 cell lineage's pair form. Standalone semantics: a cold call
-    * rebuilds identically. */
-  /** The q142 Lloyd ASSIGNMENT over the embeddings table (vec_id, cid,
-    * emb, nrm) plus its trained centroid frame — FOUR consumers derive
-    * this identical pair at identical parameters (nlist=8, lloydIters=2):
-    * q142 semanticDedup, q362 prototypicalityBand, q387
-    * semanticDecontam, and [[dedupWorklist]]'s semantic pair stage; each
-    * previously re-ran the norms scan + Lloyd rounds + assignment
-    * (~1–2.5 s apiece at sf0.1). Session-shared like [[knDocBigrams]];
-    * ONE build installs both frames (the bpe_merges/bpe_dict twin
-    * pattern — sem_cents registers FIRST so its line prices the Lloyd
-    * training and sem_assign prices the assignment on top). Standalone
-    * semantics: a cold call rebuilds identically (RoundTwentyOptSpec
-    * pins shared == standalone for all four consumers). */
-  private val semAssignCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val semCentsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def semFramesBuild(s: SparkSession, d: String): Unit = {
-    val (assign, cents) = Similarity.semAssignmentFrames(
-      table(s, d, "embeddings"), "vec_id", "embedding",
-      nlist = 8, lloydIters = 2)
-    semCentsCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        cents.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    semAssignCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        assign.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  private[queries] def semCentsShared(s: SparkSession, d: String): DataFrame = {
-    semCentsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    semAssignCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!semCentsCache.contains((s, d))) semFramesBuild(s, d)
-    semCentsCache((s, d))
-  }
-
-  private[queries] def semAssignShared(s: SparkSession, d: String): DataFrame = {
-    semCentsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    semAssignCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!semAssignCache.contains((s, d))) semFramesBuild(s, d)
-    semAssignCache((s, d))
-  }
-
-  private val worklistCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def dedupWorklist(s: SparkSession, d: String): DataFrame = {
-    worklistCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    worklistCache.getOrElseUpdate((s, d),
-      TextDedup.dedupPipeline(
-        table(s, d, "documents"), "doc_id", "text",
-        nearDupPairs(s, d),
-        Similarity.semanticDupPairsFrom(semAssignShared(s, d), "vec_id",
-          threshold = 0.3))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** The KN-family shared tokenize + per-doc bigram aggregate (doc_id,
-    * w1, w2, occ) — SEVEN queries start from this one frame
-    * (q342/q343/q344/q347/q348/q349/q354), and before r16 each rebuilt
-    * it (~1.5–4.7 s apiece at sf0.1). Session-shared like
-    * [[nearDupPairs]]; |rows| ≈ corpus bigram instances collapsed to
-    * per-doc types. Standalone semantics: a cold call rebuilds
-    * identically (TextLmSharedSpec pins shared == standalone). */
-  private val knDocBigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def knDocBigrams(s: SparkSession, d: String): DataFrame = {
-    knDocBigCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    knDocBigCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.docBigrams(
-          table(s, d, "documents"), "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The interpolated-KN bigram model TYPE table (w1, w2, lp_mu),
-    * memoized THROUGH [[knDocBigrams]] (so it must build AFTER it in
-    * SharedCaches — the dedup_worklist ordering precedent). Consumed
-    * directly by q342/q343/q354, as the reference model by q348, and as
-    * the general ratio side by q344. Zipf-bounded type table — tiny. */
-  private val knModelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def knModelShared(s: SparkSession, d: String): DataFrame = {
-    knModelCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    knModelCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.knBigramModel(
-          knDocBigrams(s, d), table(s, d, "documents"), "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The per-language KN scored TYPE frame (one row per (doc, lang,
-    * bigram type) with lp_mu under the doc's OWN language model) — feeds
-    * q369 (pooled) and q374 (per-doc + tercile mix). Session-shared like
-    * [[knDocBigrams]]; memoizes THROUGH it, so it registers AFTER it in
-    * SharedCaches. Standalone semantics: a cold call rebuilds
-    * identically (TextLmSharedSpec pins shared == standalone). */
-  private val langScoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def langKnScored(s: SparkSession, d: String): DataFrame = {
-    langScoredCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    langScoredCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.groupedKnScoredFrom(
-          knDocBigrams(s, d), table(s, d, "documents"),
-          "doc_id", "text", "lang")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The 13-rule Gopher repetition MICRO census (doc_id, n_lines,
-    * <rule>_mu x13, pass) — FIVE queries consume one build
-    * (q375/q376/q381/q385/q392; ~4-5 s apiece at sf0.1 rebuilt, the
-    * single most-shared frame after the KN caches). Session-shared like
-    * [[knDocBigrams]]; standalone semantics: a cold call rebuilds
-    * identically. */
-  private val gopherMicroCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def gopherMicroShared(s: SparkSession, d: String): DataFrame = {
-    gopherMicroCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    gopherMicroCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.gopherMicro(table(s, d, "documents"), "doc_id", "text",
-          lineTokens = 3, paraTokens = 10)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The Gopher QUALITY-rule census (q380's full output) — three
-    * consumers (q380/q385/q392). Session-shared like [[knDocBigrams]]. */
-  private val gopherQualityCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def gopherQualityShared(s: SparkSession, d: String): DataFrame = {
-    gopherQualityCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    gopherQualityCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.gopherQualityRules(table(s, d, "documents"), "doc_id",
-          "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The SoftDeDup per-doc loss-weight frame (q388's full output) —
-    * THREE consumers (q388 verbatim, q394's allocation input, q398's
-    * soft leg), each previously re-running the commonness model + per-doc
-    * score over the shared KN inventory (~1.5–1.9 s apiece at sf0.1).
-    * Memoizes THROUGH [[knDocBigrams]], so it registers AFTER it in
-    * SharedCaches. Standalone semantics: a cold call rebuilds identically
-    * (RoundNineteenOptSpec pins it). */
-  private val softWeightsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def softDedupWeightsShared(s: SparkSession, d: String): DataFrame = {
-    softWeightsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    softWeightsCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.softDedupWeights(knDocBigrams(s, d), "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The per-k memorization window inventories (doc_id, fp, nxt) —
-    * EIGHT builds per suite pass collapsed to three priced ones: q389
-    * (k=5/10/20), q393 (k=10), q397 (k=5/10/20) and the q395 card's
-    * k=10 leg all consume [[TextDedup.memWindowInventory]] frames.
-    * One TrieMap per k (the registry prices each build on its own
-    * line). Standalone semantics: a cold call rebuilds identically
-    * (RoundNineteenOptSpec pins shared == standalone). */
-  private val memWin5Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWin10Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWin20Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWinMultiCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** r20: the three per-k builds each re-paid the parquet scan + token
-    * split (guide §2.4 — one corpus pass instead of three). The parent
-    * (doc_id, k, fp, nxt) frame is minted once
-    * ([[TextDedup.memWindowInventoryMulti]]); each per-k child persists
-    * its `k = const` filter of it, so consumers see EXACTLY the frames
-    * they always did (schema and rows spec-pinned identical to the
-    * single-k builds). */
-  private[queries] def memWindowsAllShared(s: SparkSession, d: String): DataFrame = {
-    memWinMultiCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWinMultiCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.memWindowInventoryMulti(table(s, d, "documents"),
-          "doc_id", "text", Seq(5, 10, 20))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  private def memWinBuild(s: SparkSession, d: String, k: Int): DataFrame =
-    graft.operators.CacheScope.pin(
-      memWindowsAllShared(s, d).where(col("k") === k)
-        .select(col("doc_id"), col("fp"), col("nxt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private[queries] def memWindows5Shared(s: SparkSession, d: String): DataFrame = {
-    memWin5Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin5Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 5))
-  }
-
-  private[queries] def memWindows10Shared(s: SparkSession, d: String): DataFrame = {
-    memWin10Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin10Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 10))
-  }
-
-  private[queries] def memWindows20Shared(s: SparkSession, d: String): DataFrame = {
-    memWin20Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin20Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 20))
-  }
-
-  /** The tokenizer word-type SEED (w, freq, sym) — ONE corpus word scan
-    * feeding all three trainer families (bpe/wordpiece merge loops
-    * directly; unigram via the maxWordLen-filtered projection). Eight
-    * consumers ride it transitively (q331/q334/q357/q358/q350/q352/
-    * q353/q390 — far past the house 3+ rule). Session-shared like
-    * [[knDocBigrams]]; standalone semantics: a cold call rebuilds
-    * identically (TextPrepSpec pins shared == standalone). */
-  private val tokSeedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def tokSeedShared(s: SparkSession, d: String): DataFrame = {
-    tokSeedCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    tokSeedCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextPrep.seedWordTypesPlan(
-          table(s, d, "documents"), "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The trained BPE artifacts — merge table (q331) and final word-type
-    * dictionary (q334/q390). ONE merge-loop run per (session, sf dir)
-    * builds BOTH (the loop mints them simultaneously; localCheckpointed
-    * rounds make it eager), installed into their two registry caches
-    * together. Memoizes THROUGH [[tokSeedShared]] — registers AFTER it
-    * (the dedup_worklist ordering precedent); `bpe_dict` registers after
-    * `bpe_merges`, so its breakdown line prices ~0 (same build). */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bpeDictCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def bpeBuild(s: SparkSession, d: String): Unit = {
-    val (m, wt) = graft.operators.TextPrep.bpeMergeLoopFrom(
-      tokSeedShared(s, d), merges = 10)
-    bpeMergesCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    bpeDictCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      wt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    ()
-  }
-
-  private[queries] def bpeMergesShared(s: SparkSession, d: String): DataFrame = {
-    bpeMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    bpeDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!bpeMergesCache.contains((s, d))) bpeBuild(s, d)
-    bpeMergesCache((s, d))
-  }
-
-  private[queries] def bpeDictShared(s: SparkSession, d: String): DataFrame = {
-    bpeMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    bpeDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!bpeDictCache.contains((s, d))) bpeBuild(s, d)
-    bpeDictCache((s, d))
-  }
-
-  /** The trained WordPiece artifacts — the [[bpeMergesShared]] pattern
-    * for the likelihood-ratio family (q357/q358/q390). */
-  private val wpMergesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val wpDictCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def wpBuild(s: SparkSession, d: String): Unit = {
-    val (m, wt) = graft.operators.TextPrep.wordpieceMergeLoopFrom(
-      tokSeedShared(s, d), merges = 10)
-    wpMergesCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    wpDictCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      wt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    ()
-  }
-
-  private[queries] def wpMergesShared(s: SparkSession, d: String): DataFrame = {
-    wpMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    wpDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!wpMergesCache.contains((s, d))) wpBuild(s, d)
-    wpMergesCache((s, d))
-  }
-
-  private[queries] def wpDictShared(s: SparkSession, d: String): DataFrame = {
-    wpMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    wpDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!wpDictCache.contains((s, d))) wpBuild(s, d)
-    wpDictCache((s, d))
-  }
-
-  /** The unigram-LM Viterbi DP frame (one row per word type with cands/
-    * best/bounds/pieces) — the ONE frame the whole SentencePiece shelf
-    * derives from (q350/q352/q353/q390; the seed model and piece
-    * inventory are recovered from the candidate structs). Memoizes
-    * THROUGH [[tokSeedShared]] (maxWordLen-filtered projection — freq is
-    * per word TYPE, so filtering after the aggregate is identical). */
-  private val unigramDpCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def unigramDpShared(s: SparkSession, d: String): DataFrame = {
-    unigramDpCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    unigramDpCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextPrep.unigramDpFrom(
-          tokSeedShared(s, d).where(length(col("w")) <= 16)
-            .select(col("w"), col("freq")),
-          maxPieceLen = 4, maxWordLen = 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
   private val stopEn = "('the','a','of','and','to','in')"
   private val stopDe = "('der','die','das','und','ist')"
   private val stopFr = "('le','la','et','les','des')"
@@ -466,7 +84,7 @@ object LlmQueries {
     // round is vocab-bounded. All-integer; the oracle re-derives the
     // whole training loop (unrolled materialized CTEs). See
     // TextPrep.bpeTrain.
-    "q331_bpe_train" -> ((s, d) => bpeMergesShared(s, d)),
+    "q331_bpe_train" -> ((s, d) => SharedCaches.bpeMerges(s, d)),
 
     // BPE ENCODE — the train->apply round trip: q331's 10 merges, then
     // every doc re-tokenized through the trained word-type dictionary;
@@ -474,21 +92,21 @@ object LlmQueries {
     // on top of training. See TextPrep.bpeEncode.
     "q334_bpe_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
-        "doc_id", "text", bpeDictShared(s, d))),
+        "doc_id", "text", SharedCaches.bpeDict(s, d))),
 
     // WordPiece TRAINER (Schuster & Nakajima; the BERT tokenizer) — the
     // third tokenizer family: q331's merge loop with the argmax driven
     // by the likelihood-ratio score count(ab)/(count(a)*count(b)) (one
     // exact IEEE division of exact BIGINTs — no libm), tie-break
     // (score, pair_count, pair). See TextPrep.wordpieceTrain.
-    "q357_wordpiece_train" -> ((s, d) => wpMergesShared(s, d)),
+    "q357_wordpiece_train" -> ((s, d) => SharedCaches.wordpieceMerges(s, d)),
 
     // WordPiece ENCODE — the train->apply round trip over q357's merge
     // table, same closed-vocab dictionary-join contract as q334. See
     // TextPrep.wordpieceEncode.
     "q358_wordpiece_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
-        "doc_id", "text", wpDictShared(s, d))),
+        "doc_id", "text", SharedCaches.wordpieceDict(s, d))),
 
     // Per-source tokenizer compression census: BPE (q331), WordPiece
     // (q357) and unigram-LM (q350) apply passes rolled up per source —
@@ -498,7 +116,8 @@ object LlmQueries {
     "q390_tokenizer_census" -> ((s, d) =>
       graft.operators.TextPrep.tokenizerCompressionCensusFrom(
         table(s, d, "documents"), "text", "source",
-        bpeDictShared(s, d), wpDictShared(s, d), unigramDpShared(s, d))),
+        SharedCaches.bpeDict(s, d), SharedCaches.wordpieceDict(s, d),
+        SharedCaches.unigramDp(s, d))),
 
     // Character-trigram profile (n-gram analysis surface). The distinct
     // count runs through the native single-pass NgramDistinctCount
@@ -530,7 +149,7 @@ object LlmQueries {
 
     // MinHash-LSH near-duplicate pairs (banded bucket-join, exact-Jaccard
     // verified). Finds the corpus's planted ~0.98-Jaccard pairs.
-    "q31_minhash_lsh_pairs" -> ((s, d) => nearDupPairs(s, d)),
+    "q31_minhash_lsh_pairs" -> ((s, d) => SharedCaches.minhashPairGraph(s, d)),
 
     // Batch cross-run dedup against a persisted signature store — the
     // batch twin of the streaming IncrementalNearDup gate: every third
@@ -566,11 +185,11 @@ object LlmQueries {
       val docs = table(s, d, "documents")
       def side(df: DataFrame, flag: String) =
         df.select(col("doc_a"), col("doc_b")).withColumn(flag, lit(1))
-      side(nearDupPairs(s, d), "__mh")
+      side(SharedCaches.minhashPairGraph(s, d), "__mh")
         .join(side(TextDedup.simhashNearDupPairs(docs, "doc_id", "text",
           nBands = 4, maxHamming = 8), "__sh"),
           Seq("doc_a", "doc_b"), "full_outer")
-        .join(side(ngramPairs(s, d), "__ng"),
+        .join(side(SharedCaches.ngramJaccardPairs(s, d), "__ng"),
           Seq("doc_a", "doc_b"), "full_outer")
         .groupBy((coalesce(col("__mh"), lit(0)) === 1).as("in_minhash"),
           (coalesce(col("__sh"), lit(0)) === 1).as("in_simhash"),
@@ -892,7 +511,7 @@ object LlmQueries {
     // Fuzzy matching: Levenshtein edit distance between each near-dup pair's
     // text prefixes (reuses the MinHash-LSH candidates — never all-pairs).
     "q60_levenshtein" -> ((s, d) => {
-      val pairs = nearDupPairs(s, d)
+      val pairs = SharedCaches.minhashPairGraph(s, d)
       val t = table(s, d, "documents").select(col("doc_id"), substring(col("text"), 1, 60).as("head"))
       pairs.join(t.toDF("doc_a", "head_a"), "doc_a")
         .join(t.toDF("doc_b", "head_b"), "doc_b")
@@ -1062,7 +681,7 @@ object LlmQueries {
     // representative (min doc_id). The KEEP/DROP decision layer of corpus
     // dedup. Oracle walks the same graph with a recursive CTE.
     "q61_dedup_clusters" -> ((s, d) =>
-      TextDedup.connectedComponents(nearDupPairs(s, d))),
+      TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))),
 
     // Dedup retention policy — the KEEP/DROP decision the cluster map exists
     // for: every document joins its cluster (left: most docs are in none),
@@ -1073,7 +692,7 @@ object LlmQueries {
     // broadcast while the map is small. The output is the exact worklist a
     // corpus-pruning stage executes.
     "q91_dedup_retention" -> ((s, d) => {
-      val clusters = TextDedup.connectedComponents(nearDupPairs(s, d))
+      val clusters = TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))
       table(s, d, "documents")
         .select(col("doc_id"), col("source"))
         .join(clusters, Seq("doc_id"), "left")
@@ -1093,7 +712,7 @@ object LlmQueries {
     // row per cluster) are unbounded at scale — plain equi-joins, AQE decides
     // broadcast vs shuffle by measured size.
     "q121_retention_longest" -> ((s, d) => {
-      val clusters = TextDedup.connectedComponents(nearDupPairs(s, d))
+      val clusters = TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))
       val members = table(s, d, "documents")
         .select(col("doc_id"), col("n_chars"))
         .join(clusters, Seq("doc_id"))
@@ -1228,7 +847,7 @@ object LlmQueries {
     // budgets). Two tiny keyed aggs on top of the SHARED candidate graph
     // (same cached lineage as q61/q91).
     "q116_cluster_histogram" -> ((s, d) =>
-      TextDedup.connectedComponents(nearDupPairs(s, d))
+      TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))),
 
@@ -1356,7 +975,7 @@ object LlmQueries {
     // TextDedup.clusterGroupPurity.
     "q136_cluster_purity" -> ((s, d) =>
       TextDedup.clusterGroupPurity(
-        TextDedup.connectedComponents(nearDupPairs(s, d)),
+        TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d)),
         table(s, d, "documents"), "doc_id", "source")),
 
     // Pairwise source Jensen-Shannon divergence over the corpus top-200
@@ -1422,7 +1041,7 @@ object LlmQueries {
     // k+w-1 tokens guarantees a shared fingerprint at ~1/w the shingle
     // storage. df-capped inverted lists, never all-pairs. See
     // TextDedup.winnowNearDupPairs.
-    "q141_winnow_pairs" -> ((s, d) => winnowPairs(s, d)),
+    "q141_winnow_pairs" -> ((s, d) => SharedCaches.winnowPairs(s, d)),
 
     // SemDeDup: k-means-partitioned semantic dedup over the embedding
     // space — within each Lloyd cluster, drop vectors cosine-close to an
@@ -1430,7 +1049,7 @@ object LlmQueries {
     // nlist grows with the corpus); the pairwise compare never leaves its
     // cluster. See Similarity.semanticDedup.
     "q142_semantic_dedup" -> ((s, d) =>
-      Similarity.semanticDedupFrom(semAssignShared(s, d), "vec_id",
+      Similarity.semanticDedupFrom(SharedCaches.semAssign(s, d), "vec_id",
         threshold = 0.3)),
 
     // Embedding-based semantic decontamination: vectors with vec_id % 10
@@ -1439,14 +1058,14 @@ object LlmQueries {
     // the paraphrase-robust stage exact-span q361 cannot express. See
     // Similarity.semanticDecontam.
     "q387_semantic_decontam" -> ((s, d) =>
-      Similarity.semanticDecontamFrom(semAssignShared(s, d), "vec_id",
+      Similarity.semanticDecontamFrom(SharedCaches.semAssign(s, d), "vec_id",
         col("vec_id") % 10 === 0, threshold = 0.3)),
 
     // Per-source dedup attrition over the q91 retention worklist — the
     // crawl-health report (a source losing 60% to dedup is re-crawling
     // itself). One |sources|-row aggregate on the shared cluster lineage.
     "q143_dedup_attrition" -> ((s, d) => {
-      val clusters = TextDedup.connectedComponents(nearDupPairs(s, d))
+      val clusters = TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))
       val worklist = table(s, d, "documents")
         .select(col("doc_id"), col("source"))
         .join(clusters, Seq("doc_id"), "left")
@@ -1526,7 +1145,7 @@ object LlmQueries {
     // fix for exactly the leakage q118 audits. Per-split doc and group
     // counts; the no-straddle property is spec-asserted.
     "q153_cluster_split" -> ((s, d) => {
-      val clusters = TextDedup.connectedComponents(nearDupPairs(s, d))
+      val clusters = TextDedup.connectedComponents(SharedCaches.minhashPairGraph(s, d))
       table(s, d, "documents").select(col("doc_id"))
         .join(clusters, Seq("doc_id"), "left")
         .select(coalesce(col("cluster_id"), col("doc_id")).as("gid"))
@@ -1613,7 +1232,7 @@ object LlmQueries {
     // pairs (degree 1) from template families (high degree) before a
     // retention policy runs. Two tiny keyed aggs on the shared pair graph.
     "q161_dedup_degree" -> ((s, d) =>
-      nearDupPairs(s, d)
+      SharedCaches.minhashPairGraph(s, d)
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("degree"))
         .groupBy(col("degree")).agg(count(lit(1)).as("n_docs"))),
@@ -1706,14 +1325,14 @@ object LlmQueries {
     // TextLm.knCrossEntropy.
     "q342_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.knCrossEntropyFrom(
-        knDocBigrams(s, d), knModelShared(s, d), "doc_id")),
+        SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d), "doc_id")),
 
     // SoftDeDup loss-weight reweighting (Xia et al. 2024): the dedup
     // signal as per-doc LOSS WEIGHTS instead of binary drops — rarity =
     // -geometric-mean corpus bigram frequency off the shared doc-bigram
     // inventory, weight = rarity / mean rarity (mean weight ~ 1). See
     // TextLm.softDedupWeights.
-    "q388_softdedup_weights" -> ((s, d) => softDedupWeightsShared(s, d)),
+    "q388_softdedup_weights" -> ((s, d) => SharedCaches.softdedupWeights(s, d)),
 
     // q140's CCNet tercile mix driven by the KN scores: identical exact
     // integer order-statistic cutoffs, production smoothing. See
@@ -1721,7 +1340,7 @@ object LlmQueries {
     "q343_kn_ppl_mix" -> ((s, d) =>
       graft.operators.TextLm.knMixFrom(
         graft.operators.TextLm.knCrossEntropyFrom(
-          knDocBigrams(s, d), knModelShared(s, d), "doc_id"),
+          SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d), "doc_id"),
         table(s, d, "documents"), "doc_id", "source")),
 
     // q151's DSIR importance weights with BOTH models KN-smoothed; the
@@ -1730,7 +1349,7 @@ object LlmQueries {
     // See TextLm.knImportanceWeights.
     "q344_kn_importance_weights" -> ((s, d) =>
       graft.operators.TextLm.knImportanceWeightsFrom(
-        knDocBigrams(s, d), knModelShared(s, d),
+        SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d),
         table(s, d, "documents"), "doc_id", "text", "source",
         col("lang") === "en")),
 
@@ -1740,13 +1359,13 @@ object LlmQueries {
     // per document with its fate + survivor attribution. Composes the
     // q28/q31/q61/q91/q142 lineage into the run-this-first curation
     // recipe. See TextDedup.dedupPipeline.
-    "q345_dedup_pipeline" -> ((s, d) => dedupWorklist(s, d)),
+    "q345_dedup_pipeline" -> ((s, d) => SharedCaches.dedupWorklist(s, d)),
 
     // The q345 funnel: per-stage docs_in / docs_removed / docs_out in
     // stage order — the attrition report a curation run logs. One 1-row
     // aggregate over the shared worklist. See TextDedup.dedupFunnel.
     "q346_dedup_funnel" -> ((s, d) =>
-      TextDedup.dedupFunnel(dedupWorklist(s, d))),
+      TextDedup.dedupFunnel(SharedCaches.dedupWorklist(s, d))),
 
     // Full interpolated Kneser-Ney at order 3: discounted trigram layer
     // backing into CONTINUATION-count bigram and unigram layers (the
@@ -1755,7 +1374,7 @@ object LlmQueries {
     // TextLm.kn3CrossEntropy.
     "q347_kn3_xent" -> ((s, d) =>
       graft.operators.TextLm.kn3CrossEntropyFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // RHO-style excess-loss selection: per-doc xent under the weak
     // add-one bigram LM minus xent under the strong KN reference, top
@@ -1763,7 +1382,7 @@ object LlmQueries {
     // fall to the unselected side). See TextLm.excessLossSelect.
     "q348_excess_loss_select" -> ((s, d) =>
       graft.operators.TextLm.excessLossSelectFrom(
-        knDocBigrams(s, d), knModelShared(s, d),
+        SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d),
         table(s, d, "documents"), "doc_id", "text", "source")),
 
     // MODIFIED Kneser-Ney bigram cross-entropy: count-specific discounts
@@ -1773,14 +1392,14 @@ object LlmQueries {
     // TextLm.mknCrossEntropy.
     "q349_mkn_xent" -> ((s, d) =>
       graft.operators.TextLm.mknCrossEntropyFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // Unigram-LM (SentencePiece) tokenizer training step: seed subword
     // vocabulary (all substrings <= 4 chars), one hard-EM iteration with
     // exact-integer Viterbi segmentation per word TYPE, min-start
     // tie-break. See TextPrep.unigramLmTrainStep.
     "q350_unigram_lm_em" -> ((s, d) =>
-      graft.operators.TextPrep.unigramLmTrainStepFrom(unigramDpShared(s, d))),
+      graft.operators.TextPrep.unigramLmTrainStepFrom(SharedCaches.unigramDp(s, d))),
 
     // Line-level dedup with document reconstruction (CCNet/FineWeb):
     // drop every line (3-token tile) occurring in >= 3 distinct docs,
@@ -1805,7 +1424,7 @@ object LlmQueries {
     // TextLm.dsirResample.
     "q360_dsir_resample" -> ((s, d) =>
       graft.operators.TextLm.dsirResampleFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text",
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text",
         col("lang") === "en", k = 100)),
 
     // Span-level eval-set decontamination with reconstruction — the
@@ -1835,7 +1454,7 @@ object LlmQueries {
     // Similarity.prototypicalityBand.
     "q362_proto_band" -> ((s, d) =>
       Similarity.prototypicalityBandFrom(
-        semAssignShared(s, d), semCentsShared(s, d), "vec_id")),
+        SharedCaches.semAssign(s, d), SharedCaches.semCents(s, d), "vec_id")),
 
     // Held-out KN cross-entropy per source — train the KN model on the
     // md5-carve train split, score ONLY the held-out eighth with the
@@ -1844,7 +1463,7 @@ object LlmQueries {
     // doc-bigram cache. See TextLm.heldoutKnXent.
     "q364_heldout_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.heldoutKnXentFrom(
-        knDocBigrams(s, d), table(s, d, "documents"),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"),
         "doc_id", "text", "source")),
 
     // SentencePiece-style character-coverage alphabet selection (Kudo
@@ -1871,7 +1490,7 @@ object LlmQueries {
     // apart. See TextDedup.pairBleu.
     "q367_pair_bleu" -> ((s, d) =>
       TextDedup.pairBleu(
-        nearDupPairs(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.minhashPairGraph(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // Data-scaling-law fit: held-out KN cross-entropy at nested train
     // carves (1/8, 2/8, 4/8, 7/8 of the corpus — q364's md5 carve) plus
@@ -1880,7 +1499,7 @@ object LlmQueries {
     // doc-bigram cache. See TextLm.dataScalingFit.
     "q368_scaling_fit" -> ((s, d) =>
       graft.operators.TextLm.dataScalingFitFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // PER-LANGUAGE KN models, each scoring its own slice — the
     // multilingual CCNet shape (a corpus-global model makes minority
@@ -1889,7 +1508,7 @@ object LlmQueries {
     // doc-bigram cache. See TextLm.groupedKnXent.
     "q369_lang_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.groupedKnXentFromScored(
-        langKnScored(s, d), "doc_id", "lang")),
+        SharedCaches.langKnScored(s, d), "doc_id", "lang")),
 
     // Jelinek-Mercer deleted-interpolation EM: lambda in
     // p = lambda*p_ML + (1-lambda)*p_uni LEARNED from held-out data
@@ -1899,7 +1518,7 @@ object LlmQueries {
     // TextLm.jmDeletedInterpolation.
     "q370_jm_lambda_em" -> ((s, d) =>
       graft.operators.TextLm.jmDeletedInterpolationFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // The COMPLETE multilingual CCNet recipe (Wenzek et al. 2020): each
     // language's docs scored by ITS OWN KN model (q369's grouped
@@ -1916,7 +1535,7 @@ object LlmQueries {
         // the chain per reference (measured 21.9 s at sf0.1)
         graft.operators.CacheScope.persist(
           graft.operators.TextLm.groupedKnXentPerDocFromScored(
-            langKnScored(s, d), "doc_id")),
+            SharedCaches.langKnScored(s, d), "doc_id")),
         table(s, d, "documents"), "doc_id", "lang")),
 
     // Johnson-Lindenstrauss ±1 projection recall gate (Achlioptas 2003):
@@ -1936,14 +1555,14 @@ object LlmQueries {
     // TextLm.minKppProb.
     "q371_minkpp_prob" -> ((s, d) =>
       graft.operators.TextLm.minKppProbFrom(
-        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
+        SharedCaches.knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
 
     // Per-source segmentation fertility under the unigram-LM seed model
     // — the train->apply round trip for q350 (as q334 is to q331's BPE):
     // Viterbi piece counts per word TYPE, occurrence-weighted per
     // source. See TextPrep.unigramLmFertility.
     "q352_unigram_fertility" -> ((s, d) =>
-      graft.operators.TextPrep.unigramLmFertilityFrom(unigramDpShared(s, d),
+      graft.operators.TextPrep.unigramLmFertilityFrom(SharedCaches.unigramDp(s, d),
         table(s, d, "documents"), "text", "source", maxWordLen = 16)),
 
     // Unigram-LM vocabulary pruning (Kudo 2018 §3): drop the bottom half
@@ -1953,7 +1572,7 @@ object LlmQueries {
     // SentencePiece trio q350 (train) / q352 (apply) / q353 (prune).
     // See TextPrep.unigramLmPrune.
     "q353_unigram_prune" -> ((s, d) =>
-      graft.operators.TextPrep.unigramLmPruneFrom(unigramDpShared(s, d),
+      graft.operators.TextPrep.unigramLmPruneFrom(SharedCaches.unigramDp(s, d),
         keepNum = 1, keepDen = 2)),
 
     // Min-K% Prob membership/contamination score (Shi et al. 2023): mean
@@ -1962,7 +1581,7 @@ object LlmQueries {
     // audit beside the q85/q118/q135 overlap checks. See TextLm.minKProb.
     "q354_mink_prob" -> ((s, d) =>
       graft.operators.TextLm.minKProbFrom(
-        knDocBigrams(s, d), knModelShared(s, d), "doc_id")),
+        SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d), "doc_id")),
 
     // DoReMi-style domain reweighting (Xie et al. 2023): per-source
     // clamped excess loss (add-one proxy vs KN reference — the q348
@@ -1972,7 +1591,7 @@ object LlmQueries {
     // See TextLm.doremiWeights.
     "q356_doremi_weights" -> ((s, d) =>
       graft.operators.TextLm.doremiWeightsFrom(
-        knDocBigrams(s, d), knModelShared(s, d),
+        SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d),
         table(s, d, "documents"), "doc_id", "text", "source")),
 
     // Gopher repetition-rule census (Rae et al. 2021 §A1.1 Table A1,
@@ -1983,14 +1602,14 @@ object LlmQueries {
     // rational, with the all-rules pass flag at the paper's
     // thresholds. See TextDedup.gopherRepetition.
     "q375_gopher_repetition" -> ((s, d) =>
-      TextDedup.gopherRepetitionFrom(gopherMicroShared(s, d))),
+      TextDedup.gopherRepetitionFrom(SharedCaches.gopherMicro(s, d))),
 
     // The q375 census rolled up per source: one row per (source, rule)
     // with failure count + 6-dp failure rate, plus the 'all' row — the
     // corpus-card table a curation run reports. See
     // TextDedup.gopherPassReport.
     "q376_gopher_report" -> ((s, d) =>
-      TextDedup.gopherPassReportFrom(gopherMicroShared(s, d),
+      TextDedup.gopherPassReportFrom(SharedCaches.gopherMicro(s, d),
         table(s, d, "documents"), "doc_id", "source")),
 
     // Per-language UniMax over the CCNet lineage: per-lang KN tercile
@@ -2001,7 +1620,7 @@ object LlmQueries {
     "q378_lang_unimax" -> ((s, d) =>
       graft.operators.TextLm.langUnimaxFromScored(
         graft.operators.TextLm.groupedKnXentPerDocFromScored(
-          langKnScored(s, d), "doc_id"),
+          SharedCaches.langKnScored(s, d), "doc_id"),
         table(s, d, "documents"), "doc_id", "text", "lang")),
 
     // KenLM-style quantized-model size/loss audit (Heafield 2011): the
@@ -2011,14 +1630,14 @@ object LlmQueries {
     // TextLm.knQuantAudit.
     "q379_kn_quant_audit" -> ((s, d) =>
       graft.operators.TextLm.knQuantAudit(
-        knModelShared(s, d), knDocBigrams(s, d))),
+        SharedCaches.knBigramModel(s, d), SharedCaches.knDocBigrams(s, d))),
 
     // Gopher QUALITY-rule census (Rae et al. 2021 §A1.1, first block):
     // word count / mean word length / symbol ratio / bullet + ellipsis
     // line fractions / alphabetic-word fraction / stop-set presence,
     // pass at the paper's thresholds — the non-repetition half of the
     // q375 gate. See TextDedup.gopherQualityRules.
-    "q380_gopher_quality" -> ((s, d) => gopherQualityShared(s, d)),
+    "q380_gopher_quality" -> ((s, d) => SharedCaches.gopherQuality(s, d)),
 
     // Rule-vs-LM cross-audit: per q375 rule (and the all-rules gate),
     // mean KN xent of passing vs failing docs over the scored
@@ -2026,9 +1645,10 @@ object LlmQueries {
     // LM quality on THIS corpus? Rides the shared KN caches. See
     // TextDedup.gopherXentAblation.
     "q381_gopher_xent_ablation" -> ((s, d) =>
-      TextDedup.gopherXentAblationFrom(gopherMicroShared(s, d),
+      TextDedup.gopherXentAblationFrom(SharedCaches.gopherMicro(s, d),
         graft.operators.TextLm.knCrossEntropyFrom(
-          knDocBigrams(s, d), knModelShared(s, d), "doc_id"), "doc_id")),
+          SharedCaches.knDocBigrams(s, d), SharedCaches.knBigramModel(s, d),
+          "doc_id"), "doc_id")),
 
     // Duplicate-cluster size census over the shared MinHash pair graph:
     // components by size + the singleton row — the corpus-card
@@ -2036,7 +1656,7 @@ object LlmQueries {
     // See TextDedup.dupClusterCensus.
     "q382_dup_cluster_census" -> ((s, d) =>
       TextDedup.dupClusterCensus(
-        table(s, d, "documents"), "doc_id", nearDupPairs(s, d))),
+        table(s, d, "documents"), "doc_id", SharedCaches.minhashPairGraph(s, d))),
 
     // Self-BLEU-4 corpus diversity census (Zhu et al. 2018): every doc
     // BLEU-scored against the rest of the corpus as one reference pool
@@ -2050,8 +1670,8 @@ object LlmQueries {
     // the retention rate — the keep/drop artifact the two censuses
     // feed. See TextDedup.gopherFullGate.
     "q385_gopher_full_gate" -> ((s, d) =>
-      TextDedup.gopherFullGateFrom(gopherMicroShared(s, d),
-        gopherQualityShared(s, d),
+      TextDedup.gopherFullGateFrom(SharedCaches.gopherMicro(s, d),
+        SharedCaches.gopherQuality(s, d),
         table(s, d, "documents"), "doc_id", "source")),
 
     // Extractable-memorization census (Carlini et al. 2021/2023): per
@@ -2062,8 +1682,8 @@ object LlmQueries {
     // TextDedup.extractableMemorization.
     "q389_extractable_memorization" -> ((s, d) =>
       TextDedup.extractableMemorizationFrom(Seq(
-        5 -> memWindows5Shared(s, d), 10 -> memWindows10Shared(s, d),
-        20 -> memWindows20Shared(s, d)))),
+        5 -> SharedCaches.memWindowsK5(s, d), 10 -> SharedCaches.memWindowsK10(s, d),
+        20 -> SharedCaches.memWindowsK20(s, d)))),
 
     // Dedup x quality interaction census (the FineWeb ablation
     // question): per dedup-pipeline stage, Gopher-gate pass/fail doc
@@ -2071,8 +1691,8 @@ object LlmQueries {
     // worklist + the two shared-rule censuses. See
     // TextDedup.dedupQualityInteraction.
     "q392_dedup_quality_interaction" -> ((s, d) =>
-      TextDedup.dedupQualityInteractionFrom(gopherMicroShared(s, d),
-        gopherQualityShared(s, d), dedupWorklist(s, d))),
+      TextDedup.dedupQualityInteractionFrom(SharedCaches.gopherMicro(s, d),
+        SharedCaches.gopherQuality(s, d), SharedCaches.dedupWorklist(s, d))),
 
     // Per-document memorization-risk drill-down (Carlini et al.): the
     // fraction of each doc's 10-token windows that are repeated-and-
@@ -2080,7 +1700,7 @@ object LlmQueries {
     // first. Fingerprint-keyed aggregate + join, no pair join. See
     // TextDedup.memorizationRisk.
     "q393_memorization_risk" -> ((s, d) =>
-      TextDedup.memorizationRiskFrom(memWindows10Shared(s, d))),
+      TextDedup.memorizationRiskFrom(SharedCaches.memWindowsK10(s, d))),
 
     // Per-source memorization-risk census over the k grid (Carlini et
     // al. 2023's discoverable-extraction-vs-prompt-length curve, rolled
@@ -2089,8 +1709,8 @@ object LlmQueries {
     // integer compare). See TextDedup.memorizationRiskBySource.
     "q397_memorization_by_source" -> ((s, d) =>
       TextDedup.memorizationRiskBySourceFrom(Seq(
-          5 -> memWindows5Shared(s, d), 10 -> memWindows10Shared(s, d),
-          20 -> memWindows20Shared(s, d)),
+          5 -> SharedCaches.memWindowsK5(s, d), 10 -> SharedCaches.memWindowsK10(s, d),
+          20 -> SharedCaches.memWindowsK20(s, d)),
         table(s, d, "documents").select(col("doc_id").cast("long")
           .as("doc_id"), col("source")))),
 
@@ -2102,7 +1722,7 @@ object LlmQueries {
     // inventory. See Scale.softWeightedMix.
     "q394_soft_weighted_mix" -> ((s, d) =>
       graft.operators.Scale.softWeightedMix(table(s, d, "documents"),
-        "doc_id", "source", "text", softDedupWeightsShared(s, d))),
+        "doc_id", "source", "text", SharedCaches.softdedupWeights(s, d))),
 
     // Allocation ABLATION across the three discount paths: raw (q386),
     // dedup-discounted (q391, Lee x Muennighoff) and soft-weighted
@@ -2111,8 +1731,8 @@ object LlmQueries {
     // consults. See Scale.allocationAblation.
     "q398_allocation_ablation" -> ((s, d) =>
       graft.operators.Scale.allocationAblationFrom(table(s, d, "documents"),
-        "doc_id", "text", "source", softDedupWeightsShared(s, d),
-        ScaleQueries.exactSubstrDocShared(s, d))),
+        "doc_id", "text", "source", SharedCaches.softdedupWeights(s, d),
+        SharedCaches.exactSubstrDoc(s, d))),
 
     // Corpus data card v2 — the release-card roll-up of the r17/r18
     // shelves in ONE row: complete Gopher-gate retention (q375 x q380
@@ -2125,9 +1745,9 @@ object LlmQueries {
     // q389 k=10 inventory; every ratio the house half-up 6-dp rational.
     "q395_corpus_card_v2" -> ((s, d) => {
       val docs = table(s, d, "documents")
-      val gate = gopherMicroShared(s, d)
+      val gate = SharedCaches.gopherMicro(s, d)
         .select(col("doc_id"), col("pass").as("__rp"))
-        .join(gopherQualityShared(s, d)
+        .join(SharedCaches.gopherQuality(s, d)
           .select(col("doc_id"), col("pass").as("__qp")), Seq("doc_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("__rp") * col("__qp")).as("__npass"))
@@ -2135,7 +1755,7 @@ object LlmQueries {
           (expr("CAST((CAST(2 AS DECIMAL(38,0)) * __npass * 1000000" +
               " + n_docs) DIV (2 * n_docs) AS BIGINT)")
             .cast("double") / lit(1e6)).as("gopher_retention"))
-      val funnel = dedupWorklist(s, d)
+      val funnel = SharedCaches.dedupWorklist(s, d)
         .agg(count(lit(1)).as("__t"),
           sum(when(col("stage") === "retained", 0L).otherwise(1L))
             .as("__rm"))
@@ -2143,7 +1763,7 @@ object LlmQueries {
             " + __t) DIV (2 * __t) AS BIGINT)")
           .cast("double") / lit(1e6)).as("dedup_removed_frac"))
       val extr = TextDedup.extractableMemorizationFrom(
-          Seq(10 -> memWindows10Shared(s, d)))
+          Seq(10 -> SharedCaches.memWindowsK10(s, d)))
         .select(col("extractable_frac").as("extractable_frac_k10"))
       val effE = graft.operators.Scale.dataConstrainedMix(docs, "source",
           "text")
@@ -2160,7 +1780,7 @@ object LlmQueries {
       val fert = docs.select(explode(split(col("text"), " ")).as("w"))
         .where(length(col("w")) >= 1 && length(col("w")) <= 16)
         .groupBy(col("w")).agg(count(lit(1)).as("__cnt"))
-        .join(bpeDictShared(s, d).select(col("w"),
+        .join(SharedCaches.bpeDict(s, d).select(col("w"),
           size(split(col("sym"), " ")).cast("long").as("__np")), Seq("w"))
         .agg(sum(col("__cnt")).as("__nw"),
           sum(col("__cnt") * col("__np")).as("__p"))
@@ -2173,7 +1793,7 @@ object LlmQueries {
   )
 
   /** Shared CTE chain replaying the MinHash-LSH candidate graph + connected
-    * components (the same `nearDupPairs` -> `connectedComponents` lineage the
+    * components (the same `minhash_pair_graph` -> `connectedComponents` lineage the
     * Spark side shares between q61 and q91): ends at `reach(id, r)`. */
   /** Shared CTE chain (no WITH keyword) deriving the q142 SemDeDup cell
     * ASSIGNMENT — embeddings, norms, 2 Lloyd rounds from the vec_id<8

@@ -33,22 +33,6 @@ object MlQueries {
     * tie-breaking are exercised across 7 real rounds. */
   private val kcenterK = 8
 
-  /** q213's PPJoin pair set, session-keyed like LlmQueries.ngramPairs
-    * (the r12 verdict's other ≥4 s dedup heavy): the n=12 gram-set
-    * inventory + prefix-filtered candidate join is the cost; what
-    * persists is only the qualifying pair set. Standalone semantics: a
-    * cold call rebuilds identically (RoundThirteenOpsSpec pins it). */
-  private val ppjoinCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def ppjoinPairsShared(s: SparkSession, d: String): DataFrame = {
-    ppjoinCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ppjoinCache.getOrElseUpdate((s, d),
-      graft.operators.TextDedup.ppjoinPairs(
-        table(s, d, "documents"), "doc_id", "text", n = 12, threshold = 0.7)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
   val queries: Map[String, Q] = Map(
 
     // Pairwise linear-kernel MMD^2 between label groups' embedding
@@ -387,7 +371,7 @@ object MlQueries {
     // qualifying pairs brute-force, so a hash match certifies the filters
     // lose nothing (unlike the df-capped q75 scheme's documented blind
     // spot).
-    "q213_ppjoin_pairs" -> ((s, d) => ppjoinPairsShared(s, d)),
+    "q213_ppjoin_pairs" -> ((s, d) => SharedCaches.ppjoinPairs(s, d)),
 
     // One-way ANOVA F across sources on document length — the k-sample
     // sibling of q179's Welch t-test: exact BIGINT moment sums; the

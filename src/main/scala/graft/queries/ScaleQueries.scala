@@ -27,43 +27,6 @@ object ScaleQueries {
   private val splitBounds = Seq("train" -> 0.9, "val" -> 0.95)
   private val splitLast = "test"
 
-  /** The exact-substring RUN inventory at the house (l=20, maxDf=10)
-    * point — FIVE queries consume one build (q300 verbatim, q377's
-    * removal, q384's l=20 leg, q391/q398 through the dedup-discounted
-    * allocation), each previously re-paying the window-fingerprint +
-    * pair-join + island-stitch chain (~1.1–1.6 s apiece at sf0.1).
-    * Session-shared like the LlmQueries caches; standalone semantics: a
-    * cold call rebuilds identically (RoundNineteenOptSpec pins it). The
-    * persisted frame is the RUNS (tiny — pairs × diagonals above l). */
-  private val exactRunsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def exactRunsShared(s: SparkSession, d: String): DataFrame = {
-    exactRunsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    exactRunsCache.getOrElseUpdate((s, d),
-      CacheScope.pin(
-        TextDedup.exactSubstringRuns(table(s, d, "documents"),
-          "doc_id", "text", l = 20, maxDf = 10)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  /** The per-doc exact-substring dedup frame (doc_id, n_tokens,
-    * n_tokens_removed, clean_md5) at the same point — q377's whole
-    * output, consumed again by q391 and q398's dedup leg. Memoizes
-    * THROUGH [[exactRunsShared]], so it registers AFTER it in
-    * SharedCaches (the dedup_worklist ordering precedent). */
-  private val exactDocCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def exactSubstrDocShared(s: SparkSession, d: String): DataFrame = {
-    exactDocCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    exactDocCache.getOrElseUpdate((s, d),
-      CacheScope.pin(
-        TextDedup.exactSubstringDedupFrom(table(s, d, "documents"),
-          "doc_id", "text", exactRunsShared(s, d))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
   val queries: Map[String, Q] = Map(
 
     // Character n-gram Jaccard near-dup pairs — exact set similarity, the
@@ -75,10 +38,10 @@ object ScaleQueries {
     // overlap on the same candidate set — mechanism differs, result is
     // bit-identical.
     // The pair set is built once per (session, sf dir) and shared with
-    // q291's agreement Venn (LlmQueries.ngramPairs) — the candidate
+    // q291's agreement Venn (SharedCaches.ngramJaccardPairs) — the candidate
     // build is the suite's most expensive stage; the persisted result is
     // only the verified pairs above threshold.
-    "q75_ngram_jaccard_pairs" -> ((s, d) => LlmQueries.ngramPairs(s, d)),
+    "q75_ngram_jaccard_pairs" -> ((s, d) => SharedCaches.ngramJaccardPairs(s, d)),
 
     // Bloom-filter semi-join: dim-side BloomFilterAggregate sketch probes the
     // fact scan BEFORE the shuffle (same expression pair Spark's runtime
@@ -116,14 +79,14 @@ object ScaleQueries {
     // l=20 is the scaled-down stand-in for the paper's 50 on this
     // corpus's ~55-token median documents. See
     // TextDedup.exactSubstringRuns.
-    "q300_exact_substring" -> ((s, d) => exactRunsShared(s, d)),
+    "q300_exact_substring" -> ((s, d) => SharedCaches.exactRunsL20(s, d)),
 
     // Exact-substring dedup with REMOVAL + reconstruction (Lee et al.
     // 2022): q300's run inventory applied — every matched range removed
     // from the later doc of its pair (keep-first-in-corpus-order), docs
     // rebuilt from surviving tokens. Anchor-keep; idempotent on its own
     // output (spec-pinned). See TextDedup.exactSubstringDedup.
-    "q377_exact_substr_dedup" -> ((s, d) => exactSubstrDocShared(s, d)),
+    "q377_exact_substr_dedup" -> ((s, d) => SharedCaches.exactSubstrDoc(s, d)),
 
     // Dedup-granularity sweep (Lee et al. 2022 §4): the q300/q377 run
     // machinery at l = 10/20/40, each reduced to run count, distinct
@@ -131,7 +94,7 @@ object ScaleQueries {
     // threshold-tuning artifact. See TextDedup.exactSubstringSweep.
     "q384_exact_substr_sweep" -> ((s, d) =>
       TextDedup.exactSubstringSweep(table(s, d, "documents"),
-        "doc_id", "text", prebuilt = Map(20 -> exactRunsShared(s, d)))),
+        "doc_id", "text", prebuilt = Map(20 -> SharedCaches.exactRunsL20(s, d)))),
 
     // Cross-snapshot incremental exact-substring dedup, batch form (the
     // oracled twin of streaming CrossSnapshotSubstrDedup): even doc_ids
@@ -613,7 +576,7 @@ object ScaleQueries {
     "q391_dedup_aware_mix" -> ((s, d) =>
       graft.operators.Scale.dedupAwareMixFrom(
         table(s, d, "documents"), "doc_id", "source",
-        exactSubstrDocShared(s, d))),
+        SharedCaches.exactSubstrDoc(s, d))),
 
     // Token-budget source mixing: each source contributes documents in
     // md5(doc_id) order until its 600-token budget is crossed (the doc

@@ -3,29 +3,44 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the Bench order-independence contract: every session-shared
-  * (TrieMap-memoized) builder in graft.queries must be registered in
-  * [[graft.queries.SharedCaches]], and each builder must actually memoize
-  * per (session, dir) — otherwise Bench's pre-materialization pass can't
-  * keep per-query times free of order-dependent build attribution.
+  * cache is a [[graft.queries.SharedCache]] declared in
+  * [[graft.queries.SharedCaches]] (so it is registered in `builders`), the
+  * declared order is dependency order, and each builder memoizes per
+  * (session, dir) — otherwise Bench's pre-materialization pass can't keep
+  * per-query times free of order-dependent build attribution.
   */
 class BenchCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  test("SharedCaches registry covers every TrieMap-memoized builder in graft.queries") {
+  test("every shared cache is a SharedCache declared in SharedCaches") {
     val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
     assert(java.nio.file.Files.isDirectory(dir), s"expected sources at $dir")
     import scala.jdk.CollectionConverters._
-    val caches = java.nio.file.Files.list(dir).iterator().asScala
+    val sources = java.nio.file.Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      .map(src => "TrieMap\\.empty\\[\\(SparkSession, String\\), DataFrame\\]".r
-        .findAllIn(src).size)
-      .sum
-    assert(caches == graft.queries.SharedCaches.builders.size,
-      s"$caches TrieMap-memoized caches in graft.queries but " +
-        s"${graft.queries.SharedCaches.builders.size} registered in " +
-        "SharedCaches.builders — register the new cache (see scaladoc)")
+      .map(p => p.getFileName.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    val declaration = "\\bSharedCache\\s*(\\.\\s*twin\\s*)?\\(".r
+    sources.foreach { case (file, src) =>
+      if (file != "SharedCache.scala")
+        assert(!src.contains("TrieMap"),
+          s"$file holds a TrieMap: declare the cache in SharedCaches instead")
+      if (file != "SharedCache.scala" && file != "SharedCaches.scala")
+        assert(declaration.findFirstIn(src).isEmpty,
+          s"$file declares a SharedCache: declare it in SharedCaches")
+    }
+    val names = graft.queries.SharedCaches.builders.map(_._1)
+    assert(names == graft.queries.SharedCaches.all.map(_.name))
+    // perfbench's shared_cache workload times builders.take(4)
+    assert(names == Seq("minhash_pair_graph", "ngram_jaccard_pairs",
+      "winnow_pairs", "ppjoin_pairs", "brand_lift", "sem_cents", "sem_assign",
+      "dedup_worklist", "kn_doc_bigrams", "kn_bigram_model", "lang_kn_scored",
+      "softdedup_weights", "exact_runs_l20", "exact_substr_doc", "mem_windows",
+      "mem_windows_k5", "mem_windows_k10", "mem_windows_k20", "gopher_micro",
+      "gopher_quality", "tok_word_seed", "bpe_merges", "bpe_dict",
+      "wordpiece_merges", "wordpiece_dict", "unigram_dp"))
   }
 
   test("registry is dependency-ordered: dedup_worklist builds AFTER minhash_pair_graph") {
@@ -38,6 +53,23 @@ class BenchCacheSpec extends AnyFunSuite {
     // kn_bigram_model memoizes THROUGH kn_doc_bigrams — same rule
     assert(names.indexOf("kn_doc_bigrams") < names.indexOf("kn_bigram_model"),
       s"dependency order violated in SharedCaches.builders: $names")
+  }
+
+  test("registry is dependency-ordered: building an entry builds no later entry but its twin") {
+    // A cache that memoizes THROUGH a later-declared one would absorb that
+    // cache's whole build, and the bench breakdown would misattribute the
+    // cost (Bench builds in declared order). A fresh session starts with
+    // every cache unbuilt.
+    val s = spark.newSession()
+    val all = graft.queries.SharedCaches.all
+    all.zipWithIndex.foreach { case (c, i) =>
+      c(s, sf)
+      assert(c.isBuilt(s, sf), s"${c.name} not built after its call")
+      val early = all.drop(i + 1)
+        .filter(l => l.isBuilt(s, sf) && !c.twin.contains(l.name))
+      assert(early.isEmpty, s"building ${c.name} built later-declared " +
+        s"${early.map(_.name).mkString(", ")}: declare them before ${c.name}")
+    }
   }
 
   test("each registered builder memoizes: second call returns the same plan instance") {
